@@ -38,6 +38,7 @@ from resolve_spark.operators import ann as ANN
 from resolve_spark.operators import blocking as B
 from resolve_spark.operators import clustering as C
 from resolve_spark.operators import dedup as DD
+from resolve_spark.operators.budgets import fits, vocab_bitmask
 from resolve_spark.operators.pairs import candidate_pairs
 from resolve_spark.sources import tables as T
 
@@ -253,7 +254,7 @@ def _q04_levenshtein_pairs(spark, sf_dir):  # K4 over blocked self-join
     lev = F.round(
         S.levenshtein_similarity(F.col("na"), F.col("nb")), 6
     ).alias("lev_sim")
-    if names.count() <= 2048:
+    if fits("q04_distinct_names", names.count()):
         nl = (
             names.select(F.col("p_name").alias("na"))
             .join(names.select(F.col("p_name").alias("nb")),
@@ -317,19 +318,9 @@ def _q05_jaccard_pairs(spark, sf_dir):  # K5 over blocked self-join
     # intersection. |A∩B| = popcount(ma & mb) and |A| = popcount(ma)
     # are the same integers the array kernel feeds its division, and
     # the empty conventions map to popcount() == 0 — identical rows.
-    vocab = [
-        r["tok"]
-        for r in d.select(F.explode("toks").alias("tok"))
-        .distinct().orderBy("tok").limit(65).collect()
-    ]
-    if len(vocab) <= 64:
-        bitmap = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in vocab]),
-            F.array(*[
-                F.lit((1 << i) - (1 << 64 if i == 63 else 0)).cast("long")
-                for i in range(len(vocab))
-            ]),
-        )
+    vocab = vocab_bitmask(d.select(F.explode("toks").alias("tok")).distinct())
+    if vocab is not None:
+        _, bitmap = vocab
         dm = d.select(
             "doc_id", "lang",
             # null toks -> null mask -> null jac -> filtered, exactly

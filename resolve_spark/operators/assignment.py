@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from resolve_spark.operators.budgets import fits
+
 
 def _dedup_pairs(pairs: DataFrame, id_a: str, id_b: str, score_col: str) -> DataFrame:
     """Collapse duplicate (id_a, id_b) rows to their max score: the
@@ -90,13 +92,6 @@ def mutual_best_pairs(
     return _mutual_best_deduped(
         _dedup_pairs(pairs, id_a, id_b, score_col), id_a, id_b, score_col
     )
-
-
-#: single-scan sequential-greedy budget: a deduped pair table at or
-#: under this many rows is matched in ONE sorted pass inside a single
-#: task instead of iterating the distributed fixpoint (~160 MB of
-#: (long, long, double) rows at the cap — comfortably one-task-sized).
-_SEQ_GREEDY_MAX_PAIRS = 30_000_000
 
 
 def _greedy_sequential_local(
@@ -147,7 +142,6 @@ def greedy_one_to_one(
     max_rounds: int = 50,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 3,
-    sequential_max_pairs: int = _SEQ_GREEDY_MAX_PAIRS,
 ) -> DataFrame:
     """Exact sequential-greedy one-to-one matching, computed
     distributively as the mutual-best fixpoint. Returns the matched
@@ -156,9 +150,9 @@ def greedy_one_to_one(
     (pathological score-sorted chains) — never silently truncates.
 
     r7: the deduped pair table is already materialized for lineage
-    truncation, so its exact size is known for free; at or below
-    ``sequential_max_pairs`` rows the matching runs as ONE sorted scan
-    (:func:`_greedy_sequential_local`) — identical output by the
+    truncation, so its exact size is known for free; within the
+    ``greedy_sequential_pairs`` budget the matching runs as ONE sorted
+    scan (:func:`_greedy_sequential_local`) — identical output by the
     documented greedy<->fixpoint equivalence, none of the per-round
     window/anti-join jobs (measured 35.8s -> 17s at sf1.0's 6.7M
     pairs). The distributed fixpoint remains the plan above the budget.
@@ -185,7 +179,7 @@ def greedy_one_to_one(
     # So the gate materializes the raw projection (what the fixpoint's
     # round-0 checkpoint paid anyway) and skips the groupBy exchange.
     proj = pairs.select(id_a, id_b, score_col).localCheckpoint()
-    if proj.count() <= sequential_max_pairs:
+    if fits("greedy_sequential_pairs", proj.count()):
         return _greedy_sequential_local(proj, id_a, id_b, score_col)
     remaining = _truncate(_dedup_pairs(proj, id_a, id_b, score_col), 0)
     accepted: list[DataFrame] = []

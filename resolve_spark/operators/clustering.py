@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from resolve_spark.config import HYBRID_DIRECT_THRESHOLD
+from resolve_spark.operators.budgets import fits
 
 
 def _fingerprint(edges: DataFrame) -> tuple[int, int]:
@@ -67,14 +68,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
     self_edges = mins.select(F.col("src"), F.col("m").alias("dst"))
     return attached.unionByName(self_edges).distinct()
-
-
-#: single-task connected-components budget: an edge list at or under
-#: this many rows is solved in ONE task with a vectorized numpy
-#: pointer-jumping pass (~16 bytes/edge in flight; well inside one
-#: worker) instead of iterating the distributed star rounds. The star
-#: fixpoint stays the plan above the budget.
-_CC_LOCAL_MAX_EDGES = 20_000_000
 
 
 def _cc_local(cur: DataFrame) -> DataFrame:
@@ -136,7 +129,6 @@ def connected_components(
     max_iterations: int = 50,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 3,
-    local_max_edges: int = _CC_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """(src,dst) edge list -> (rid, cluster_id) with cluster_id = min
     member id of the component. Only nodes appearing in edges are
@@ -169,7 +161,7 @@ def connected_components(
     # r7: the deduped edge list is already materialized for lineage
     # truncation, so its size is known for free; small graphs solve in
     # one vectorized task instead of the round loop (guide §1.2).
-    if cur.count() <= local_max_edges:
+    if fits("cc_local_edges", cur.count()):
         return _cc_local(cur)
     prev_fp = None
     for rnd in range(1, max_iterations + 1):

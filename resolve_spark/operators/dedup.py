@@ -41,6 +41,7 @@ from resolve_spark.functions.hashing import check_hash_impl
 from resolve_spark.functions import text as TX
 from resolve_spark.functions import similarity as S
 from resolve_spark.operators import blocking as B
+from resolve_spark.operators.budgets import broadcaster, fits, vocab_bitmask
 from resolve_spark.operators.clustering import assign_clusters
 from resolve_spark.operators.pairs import (
     candidate_pairs, comb2_exact, product_within_budget,
@@ -100,67 +101,65 @@ def ngram_jaccard_pairs(
     )
 
 
-def _wjacc_bits(vrows):
-    """Shared small-vocabulary bit machinery: token->bit assignment,
-    the token->bit literal map expression, and the byte-indexed
-    partial-sum iw expression builder. The SINGLE place the weight
-    literals are laid out, so every fast path computes the identical
-    exact longs."""
-    bit = {
-        r["tok"]: ((1 << i) - (1 << 64 if i == 63 else 0))
-        for i, r in enumerate(vrows)
-    }
-    wlit = [(bit[r["tok"]], int(r["w"])) for r in vrows]
-    bitmap = F.map_from_arrays(
-        F.array(*[F.lit(t) for t in bit]),
-        F.array(*[F.lit(v).cast("long") for v in bit.values()]),
+def _wjacc_bits(vrows, im):
+    """Weighted popcount of the mask ``im`` over the probed vocabulary
+    (:func:`vocab_bitmask` rows, bit i = i-th row, weight ``w``): iw =
+    Σ w of the set bits, as one 256-entry partial-sum literal array per
+    mask byte, iw = Σ element_at(T_k, byte_k + 1) — ~4 array lookups.
+    The SINGLE place the weight literals are laid out, so every fast
+    path computes the identical exact longs (a 31-term CASE chain
+    measured 1.2µs/row, 87s over 72M pairs; the lookups are ~20x
+    cheaper)."""
+    ws = [int(r["w"]) for r in vrows]
+    n_bytes = (len(ws) + 7) // 8
+    iw = None
+    for k in range(n_bytes):
+        tbl = []
+        for v in range(256):
+            s = 0
+            for j in range(8):
+                if (v >> j) & 1 and 8 * k + j < len(ws):
+                    s += ws[8 * k + j]
+            tbl.append(s)
+        idx = (
+            F.shiftright(im, 8 * k).bitwiseAND(F.lit(255)).cast("int")
+            + F.lit(1)
+        )
+        term = F.element_at(
+            F.array(*[F.lit(x).cast("long") for x in tbl]), idx
+        )
+        iw = term if iw is None else iw + term
+    return iw
+
+
+def _wjacc_masks(tww: DataFrame, bitmap) -> DataFrame:
+    """(rid, tok, w) -> (rid, _mask, _W). Tokens are distinct per rid,
+    so the sum of their disjoint bit values is the bitwise OR."""
+    return tww.groupBy("rid").agg(
+        F.sum(F.element_at(bitmap, F.col("tok"))).alias("_mask"),
+        F.sum("w").alias("_W"),
     )
 
-    def iw_expr(im):
-        # weighted popcount via byte-indexed literal tables: one
-        # 256-entry partial-sum array per mask byte,
-        # iw = Σ element_at(T_k, byte_k+1) — ~4 array lookups, exact
-        # long (tables are sums of the same weight literals).
-        n_bytes = (len(wlit) + 7) // 8
-        iw = None
-        for k in range(n_bytes):
-            tbl = []
-            for v in range(256):
-                s = 0
-                for j in range(8):
-                    if (v >> j) & 1 and 8 * k + j < len(wlit):
-                        s += wlit[8 * k + j][1]
-                tbl.append(s)
-            idx = (
-                F.shiftright(im, 8 * k).bitwiseAND(F.lit(255)).cast("int")
-                + F.lit(1)
-            )
-            term = F.element_at(
-                F.array(*[F.lit(x).cast("long") for x in tbl]), idx
-            )
-            iw = term if iw is None else iw + term
-        return iw
 
-    return bitmap, iw_expr
-
-
-#: all-pairs-over-distinct-sets budget for the weighted-Jaccard fast
-#: path: the distinct-set cross product is pure codegen bit ops (mask
-#: AND + 4 byte-table lookups + one division), so ~2e9 evaluations are
-#: seconds of cluster time; beyond it the banded candidate path remains
-#: the plan. Same runtime-probe discipline as _CONTAIN_SET_PAIR_BUDGET.
-_WJACC_SET_PAIR_BUDGET = 2_000_000_000
+def _wjacc_keep(wj, iw, threshold: float):
+    """Emission predicate shared by the bitmask plans. At threshold <= 0
+    every pair passes ``wj >= threshold``, but the token-join verify
+    only reaches pairs sharing a token, so require iw > 0 instead."""
+    return (wj >= threshold) if threshold > 0 else (iw > 0)
 
 
 def _small_vocab_wjaccard_allpairs(
     tww_a: DataFrame,
     tww_b: DataFrame | None,
-    weights: DataFrame,
+    vocab,
     threshold: float,
+    n_docs: int,
 ):
     """EXACT all-pairs weighted Jaccard over DISTINCT token sets — or
-    None when the data does not qualify (vocabulary > 64 tokens, or the
-    distinct-set pair count exceeds ``_WJACC_SET_PAIR_BUDGET``).
+    None when the distinct-set pair count exceeds the
+    ``wjaccard_set_pairs`` budget. ``vocab`` is the caller's
+    :func:`vocab_bitmask` probe of the weight table; ``n_docs`` bounds
+    the member tables' rows.
 
     Only valid for callers whose contract is full recall at the
     threshold (tfidf_weighted_jaccard_pairs with the ICWS pass on,
@@ -180,34 +179,23 @@ def _small_vocab_wjaccard_allpairs(
     ``tww_b=None`` means self-dedup (emit id_a < id_b once per pair);
     otherwise cross-corpus (id_a from a, id_b from b, no ordering).
     """
-    vrows = weights.select("tok", "w").orderBy("tok").limit(65).collect()
-    if len(vrows) > 64:
-        return None
-    bitmap, iw_expr = _wjacc_bits(vrows)
+    vrows, bitmap = vocab
     spark = tww_a.sparkSession
     par = spark.sparkContext.defaultParallelism
-
-    def masks(tww: DataFrame) -> DataFrame:
-        return tww.groupBy("rid").agg(
-            F.sum(F.element_at(bitmap, F.col("tok"))).alias("_mask"),
-            F.sum("w").alias("_W"),
-        )
-
     same = tww_b is None
-    m_a = masks(tww_a).localCheckpoint()
-    m_b = m_a if same else masks(tww_b).localCheckpoint()
+    m_a = _wjacc_masks(tww_a, bitmap).localCheckpoint()
+    m_b = m_a if same else _wjacc_masks(tww_b, bitmap).localCheckpoint()
     sets_a = m_a.groupBy("_mask").agg(F.min("_W").alias("_W"))
     sets_b = sets_a if same else m_b.groupBy("_mask").agg(F.min("_W").alias("_W"))
     na = sets_a.count()
     nb = na if same else sets_b.count()
-    n_pairs = na * (na + 1) // 2 if same else na * nb
-    if n_pairs > _WJACC_SET_PAIR_BUDGET:
+    if not fits("wjaccard_set_pairs", na * (na + 1) // 2 if same else na * nb):
         return None
     sa = sets_a.select(
         F.col("_mask").alias("_ma"), F.col("_W").alias("_wa")
     ).repartition(par)
     sb = sets_b.select(F.col("_mask").alias("_mb"), F.col("_W").alias("_wb"))
-    iw = iw_expr(F.col("_ma").bitwiseAND(F.col("_mb")))
+    iw = _wjacc_bits(vrows, F.col("_ma").bitwiseAND(F.col("_mb")))
     wj = F.round(iw / (F.col("_wa") + F.col("_wb") - iw), 6)
     cond = (F.col("_ma") <= F.col("_mb")) if same else None
     if threshold > 0:
@@ -242,46 +230,33 @@ def _small_vocab_wjaccard_allpairs(
     if cond is not None:
         joined = joined.where(cond)
     qual = (
-        joined.where(wj >= threshold)
+        joined.where(_wjacc_keep(wj, iw, threshold))
         .select("_ma", "_mb", wj.alias("wjaccard"))
     )
     # member tables are doc-sized (rid + mask); the planner cannot see
     # that through the checkpoint and would sort-merge the (much
-    # larger) qualifying mask-pair stream — broadcast the attach
-    # (measured: the sort-merge expansion was 64s of q101's 85s at
-    # sf1.0, broadcast ~30s)
-    if same:
-        mem_a = F.broadcast(
-            m_a.select(F.col("rid").alias("_ra"), F.col("_mask").alias("_ma"))
+    # larger) qualifying mask-pair stream — broadcast the attach while
+    # the corpus is broadcast-sized (measured: the sort-merge
+    # expansion was 64s of q101's 85s at sf1.0, broadcast ~30s)
+    mem_a = m_a.select(F.col("rid").alias("_ra"), F.col("_mask").alias("_ma"))
+    mem_b = m_b.select(F.col("rid").alias("_rb"), F.col("_mask").alias("_mb"))
+    bc = broadcaster(n_docs)
+    out = qual.join(bc(mem_a), "_ma").join(bc(mem_b), "_mb")
+    if not same:
+        return out.select(
+            F.col("_ra").alias("id_a"), F.col("_rb").alias("id_b"), "wjaccard"
         )
-        mem_b = F.broadcast(
-            m_a.select(F.col("rid").alias("_rb"), F.col("_mask").alias("_mb"))
-        )
-        # ONE pass over the qualifying mask pairs (a cross/within
-        # branch union re-ran the whole mask-cross subtree once per
-        # branch — measured 8.3s doubled): distinct-mask pairs are
-        # canonical (_ma <= _mb) so the member cross emits each doc
-        # pair once; same-mask pairs keep the _ra < _rb half.
-        return (
-            qual.join(mem_a, "_ma")
-            .join(mem_b, "_mb")
-            .where((F.col("_ma") != F.col("_mb")) | (F.col("_ra") < F.col("_rb")))
-            .select(
-                F.least("_ra", "_rb").alias("id_a"),
-                F.greatest("_ra", "_rb").alias("id_b"),
-                "wjaccard",
-            )
-        )
-    mem_a = F.broadcast(
-        m_a.select(F.col("rid").alias("id_a"), F.col("_mask").alias("_ma"))
-    )
-    mem_b = F.broadcast(
-        m_b.select(F.col("rid").alias("id_b"), F.col("_mask").alias("_mb"))
-    )
-    return (
-        qual.join(mem_a, "_ma")
-        .join(mem_b, "_mb")
-        .select("id_a", "id_b", "wjaccard")
+    # ONE pass over the qualifying mask pairs (a cross/within branch
+    # union re-ran the whole mask-cross subtree once per branch —
+    # measured 8.3s doubled): distinct-mask pairs are canonical
+    # (_ma <= _mb) so the member cross emits each doc pair once;
+    # same-mask pairs keep the _ra < _rb half.
+    return out.where(
+        (F.col("_ma") != F.col("_mb")) | (F.col("_ra") < F.col("_rb"))
+    ).select(
+        F.least("_ra", "_rb").alias("id_a"),
+        F.greatest("_ra", "_rb").alias("id_b"),
+        "wjaccard",
     )
 
 
@@ -289,20 +264,19 @@ def _small_vocab_wjaccard(
     cand: DataFrame,
     tww_a: DataFrame,
     tww_b: DataFrame,
-    weights: DataFrame,
+    vocab,
     threshold: float,
-    dedup_after: bool = False,
-    broadcast_masks: bool = False,
-):
-    """Weighted-Jaccard verify, small-vocabulary formulation — or None
-    when the corpus vocabulary exceeds 64 tokens.
+    n_docs: int,
+) -> DataFrame:
+    """Weighted-Jaccard verify, small-vocabulary formulation; the
+    fallback is :func:`_token_join_wjaccard`.
 
     The exact verify needs, per candidate pair, iw = Σ w_t over shared
     tokens and the per-doc weight totals. The generic plan is a
     (candidate x token) equi-join + pair groupBy — O(candidates x
     tokens/doc) shuffled rows (measured 1e9 rows / 110s of q104's 157s
     at sf1.0). When every token fits one machine word, each doc is a
-    bitmask + a total, and iw is a 64-term codegen'd expression over
+    bitmask + a total, and iw is a codegen'd expression over
     mask & mask — no join, no pair-key shuffle, same exact longs, so
     the emitted (id_a, id_b, wjaccard) rows are identical by
     construction. Guide §2.3/§2.4: replace the biggest shuffle with a
@@ -310,59 +284,78 @@ def _small_vocab_wjaccard(
     checked at runtime from the weights table) allows it.
 
     ``tww_*``: (rid, tok, w) streams (distinct tokens per rid);
-    ``cand``: (id_a, id_b). Returns the verified pair frame or None.
-
-    ``dedup_after``: run the pair dedup AFTER the threshold filter
-    instead of expecting pre-deduplicated candidates. Measured a net
-    LOSS on the bench corpus (q101 142s -> 350s at sf1.0): the corpus
-    is dup-dense, so most candidates pass the threshold and the
-    post-filter dedup aggregates nearly the full pre-dedup stream
-    (93M rows) instead of the 72.6M distinct one, with none of the
-    map-side reduction the early dedup gives the verify. Kept for
-    sparse-threshold callers; in-repo callers pass False.
+    ``cand``: (id_a, id_b), pre-deduplicated; ``vocab``: the caller's
+    :func:`vocab_bitmask` probe of the weight table; ``n_docs`` bounds
+    the mask tables' rows.
     """
-    vrows = weights.select("tok", "w").orderBy("tok").limit(65).collect()
-    if len(vrows) > 64:
-        return None
-    bitmap, iw_expr = _wjacc_bits(vrows)
-
-    def masks(tww: DataFrame) -> DataFrame:
-        return tww.groupBy("rid").agg(
-            # tokens are distinct per rid, so the sum of disjoint bit
-            # values is the bitwise OR of the mask
-            F.sum(F.element_at(bitmap, F.col("tok"))).alias("_mask"),
-            F.sum("w").alias("_W"),
-        )
-
-    m_a = masks(tww_a)
-    m_b = m_a if tww_b is tww_a else masks(tww_b)
-    ma = m_a.selectExpr("rid as id_a", "_mask as _ma", "_W as _wa")
-    mb = m_b.selectExpr("rid as id_b", "_mask as _mb", "_W as _wb")
-    if broadcast_masks:
-        # planner size estimates for a groupBy-of-join subtree are too
-        # pessimistic to pick the broadcast itself, and a sort-merge
-        # attach would shuffle+sort the (much larger) candidate stream
-        # twice (observed: 2 SMJs over 93M rows). Callers assert the
-        # per-doc mask table is broadcast-sized (3 longs per doc).
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    # weighted popcount via byte-indexed literal tables (_wjacc_bits):
-    # a 31-term CASE chain measured 1.2µs/row (87s over 72M pairs); the
-    # ~4 array lookups are ~20x cheaper and produce the identical exact
-    # long (tables are sums of the same weight literals).
-    iw = iw_expr(F.col("_ma").bitwiseAND(F.col("_mb")))
-    out = (
+    vrows, bitmap = vocab
+    m_a = _wjacc_masks(tww_a, bitmap)
+    m_b = m_a if tww_b is tww_a else _wjacc_masks(tww_b, bitmap)
+    # planner size estimates for a groupBy-of-join subtree are too
+    # pessimistic to pick the broadcast itself, and a sort-merge attach
+    # would shuffle+sort the (much larger) candidate stream twice
+    # (observed: 2 SMJs over 93M rows); the mask tables hold 3 longs
+    # per doc
+    bc = broadcaster(n_docs)
+    ma = bc(m_a.selectExpr("rid as id_a", "_mask as _ma", "_W as _wa"))
+    mb = bc(m_b.selectExpr("rid as id_b", "_mask as _mb", "_W as _wb"))
+    iw = _wjacc_bits(vrows, F.col("_ma").bitwiseAND(F.col("_mb")))
+    wj = F.round(iw / (F.col("_wa") + F.col("_wb") - iw), 6)
+    return (
         cand.join(ma, "id_a")
         .join(mb, "id_b")
+        .where(_wjacc_keep(wj, iw, threshold))
+        .select("id_a", "id_b", wj.alias("wjaccard"))
+    )
+
+
+def _token_join_wjaccard(
+    cand: DataFrame, tww_a: DataFrame, tww_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Weighted-Jaccard verify for any vocabulary: (candidate x token)
+    equi-join for iw, per-doc weight totals joined back."""
+    inter = (
+        cand
+        .join(tww_a.selectExpr("rid as id_a", "tok", "w"), "id_a")
+        .join(tww_b.selectExpr("rid as id_b", "tok"), ["id_b", "tok"])
+        .groupBy("id_a", "id_b")
+        .agg(F.sum("w").alias("iw"))
+    )
+    tot_a = tww_a.groupBy("rid").agg(F.sum("w").alias("W"))
+    tot_b = tot_a if tww_b is tww_a else tww_b.groupBy("rid").agg(F.sum("w").alias("W"))
+    return (
+        inter.join(tot_a.selectExpr("rid as id_a", "W as wa"), "id_a")
+        .join(tot_b.selectExpr("rid as id_b", "W as wb"), "id_b")
         .select(
-            "id_a",
-            "id_b",
+            "id_a", "id_b",
             F.round(
-                iw / (F.col("_wa") + F.col("_wb") - iw), 6
+                F.col("iw") / (F.col("wa") + F.col("wb") - F.col("iw")), 6
             ).alias("wjaccard"),
         )
         .where(F.col("wjaccard") >= threshold)
     )
-    return out.dropDuplicates(["id_a", "id_b"]) if dedup_after else out
+
+
+def _idf_weights(tw: DataFrame, n_docs: int, idf_scale: int):
+    """(rid, tok) stream -> (weights, vocab): the pinned (tok, w) table
+    with w = round(idf_scale * ln(1 + n_docs / df)), and its
+    :func:`vocab_bitmask` probe — taken once per call and passed to both
+    the all-pairs and the verify plan.
+
+    r7: the weight table is consumed by every downstream branch
+    (token-weight joins, per-doc totals, ICWS sketch input, the probe)
+    — without a pin each branch re-runs the full explode + groupBy.
+    Vocabulary-sized, so the materialization is tiny relative to one
+    recompute (guide §5 caching rule)."""
+    dfreq = tw.groupBy("tok").agg(F.count("*").alias("df"))
+    weights = dfreq.select(
+        "tok",
+        F.round(
+            F.lit(float(idf_scale))
+            * F.log(F.lit(1.0) + F.lit(float(n_docs)) / F.col("df"))
+        ).cast("long").alias("w"),
+    ).localCheckpoint()
+    return weights, vocab_bitmask(weights)
 
 
 def _icws_sketch(tww: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -465,22 +458,9 @@ def tfidf_weighted_jaccard_pairs(
     # explode per consumer (guide §5 caching rule; linear in corpus
     # tokens, the same rows every consumer shuffles anyway)
     tw = toks.select("rid", F.explode("t").alias("tok")).localCheckpoint()
-    dfreq = tw.groupBy("tok").agg(F.count("*").alias("df"))
-    weights = dfreq.select(
-        "tok",
-        F.round(
-            F.lit(float(idf_scale))
-            * F.log(F.lit(1.0) + F.lit(float(n_docs)) / F.col("df"))
-        ).cast("long").alias("w"),
-    )
-    # r7: the (tok, w) weight table is consumed by every downstream
-    # branch (token-weight joins, per-doc totals, ICWS sketch input,
-    # the small-vocab probe) — without a pin each branch re-runs the
-    # full explode + groupBy. Vocabulary-sized, so the materialization
-    # is tiny relative to one recompute (guide §5 caching rule).
-    weights = weights.localCheckpoint()
+    weights, vocab = _idf_weights(tw, n_docs, idf_scale)
     tw = tw.join(weights, "tok")
-    if icws_hashes:
+    if icws_hashes and vocab is not None:
         # r7 (guide §1.2): with the ICWS pass on, the contract — and
         # the frozen oracle — is full recall at the threshold (exact
         # all-pairs). When the runtime probe shows the vocabulary fits
@@ -494,10 +474,9 @@ def tfidf_weighted_jaccard_pairs(
         # oracle's 6.86M; the fast path matches the oracle at every
         # notch). Banding remains the plan for large-vocabulary
         # corpora, where full recall stays explicitly approximate.
-        fast = _small_vocab_wjaccard_allpairs(tw, None, weights, threshold)
+        fast = _small_vocab_wjaccard_allpairs(tw, None, vocab, threshold, n_docs)
         if fast is not None:
             return fast
-    tot = tw.groupBy("rid").agg(F.sum("w").alias("W"))
     cfg = BlockingConfig(
         enable_canopy=False, minhash_column=content_col,
         minhash_num_hashes=num_hashes, minhash_bands=bands,
@@ -521,45 +500,20 @@ def tfidf_weighted_jaccard_pairs(
             .select("id_a", "id_b")
         )
         cand = cand.unionByName(wpairs).dropDuplicates(["id_a", "id_b"])
-    fast = _small_vocab_wjaccard(cand, tw, tw, weights, threshold,
-                                 broadcast_masks=n_docs <= 4_000_000)
-    if fast is not None:
-        return fast
-    inter = (
-        cand
-        .join(tw.selectExpr("rid as id_a", "tok", "w"), "id_a")
-        .join(tw.selectExpr("rid as id_b", "tok"), ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("w").alias("iw"))
-    )
-    return (
-        inter.join(tot.selectExpr("rid as id_a", "W as wa"), "id_a")
-        .join(tot.selectExpr("rid as id_b", "W as wb"), "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(
-                F.col("iw") / (F.col("wa") + F.col("wb") - F.col("iw")), 6
-            ).alias("wjaccard"),
-        )
-        .where(F.col("wjaccard") >= threshold)
-    )
-
-
-#: fast-path gate for containment_pairs: all-pairs over DISTINCT token
-#: sets is used only while C(n_sets, 2) stays under this (the cross
-#: product is pure codegen bit ops, so 2e8 evaluations are seconds of
-#: cluster time); beyond it the PPJoin prefix filter remains the plan.
-_CONTAIN_SET_PAIR_BUDGET = 200_000_000
+    if vocab is not None:
+        return _small_vocab_wjaccard(cand, tw, tw, vocab, threshold, n_docs)
+    return _token_join_wjaccard(cand, tw, tw, threshold)
 
 
 def _containment_pairs_small_vocab(toks: DataFrame, threshold_pct: int):
     """Exact containment join, small-vocabulary formulation — or None
     when the data does not qualify.
 
-    When the corpus vocabulary fits one machine word (<= 64 distinct
-    tokens) every token SET is a bitmask, and containment depends only
-    on the set, not the document. So: dedupe documents to distinct
-    sorted token sets (set_id = min rid), compare DISTINCT SETS
+    When the corpus vocabulary fits one machine word (the
+    ``vocab_bitmask_tokens`` budget) every token SET is a bitmask, and
+    containment depends only on the set, not the document. So: dedupe
+    documents to distinct sorted token sets (set_id = min rid), compare
+    DISTINCT SETS
     all-pairs with bit_and/bit_count (pure whole-stage codegen — no
     candidate-generation join, no shuffle of a 1e8-row token-pair
     stream, no per-pair array_intersect), and expand qualifying set
@@ -569,20 +523,17 @@ def _containment_pairs_small_vocab(toks: DataFrame, threshold_pct: int):
     (prefix filtering has exact recall; all-pairs trivially so) and the
     verify inequality 100*overlap >= t*min(n_a, n_b) plus the rounded
     containment double are computed from identical integers. Guarded by
-    _CONTAIN_SET_PAIR_BUDGET so the quadratic-in-distinct-sets cross
-    product can never run away on diverse corpora (guide §1.2: change
+    the ``containment_set_pairs`` budget so the quadratic-in-distinct-sets
+    cross product can never run away on diverse corpora (guide §1.2: change
     the algorithm only where the data supports it, measured at runtime
     from two O(corpus) aggregates)."""
     spark = toks.sparkSession
     par = spark.sparkContext.defaultParallelism
     ts = toks.select("rid", F.array_sort("t").alias("ts"), F.size("t").alias("m"))
-    vocab = ts.select(F.explode("ts").alias("tok")).groupBy("tok").agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    vrows = vocab.select("tok").orderBy("tok").limit(65).collect()
-    if len(vrows) > 64:
+    vocab = vocab_bitmask(ts.select(F.explode("ts").alias("tok")).distinct())
+    if vocab is None:
         return None
-    pos = {r["tok"]: i for i, r in enumerate(vrows)}
+    _, bitmap = vocab
     sets = (
         ts.groupBy("ts")
         .agg(F.min("rid").alias("sid"))
@@ -591,28 +542,13 @@ def _containment_pairs_small_vocab(toks: DataFrame, threshold_pct: int):
             "ts",
             F.size("ts").alias("n"),
             F.aggregate(
-                F.transform(
-                    "ts",
-                    lambda t: F.element_at(
-                        F.map_from_arrays(
-                            F.array(*[F.lit(k) for k in pos]),
-                            F.array(
-                                # bit 63 is the sign bit: wrap to the
-                                # negative long with the same bit pattern
-                                *[F.lit((1 << v) - (1 << 64 if v == 63 else 0))
-                                  .cast("long") for v in pos.values()]
-                            ),
-                        ),
-                        t,
-                    ),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc.bitwiseOR(x),
+                "ts", F.lit(0).cast("long"),
+                lambda acc, t: acc.bitwiseOR(F.element_at(bitmap, t)),
             ).alias("mask"),
         )
     )
     n_sets = sets.count()
-    if n_sets * (n_sets - 1) // 2 > _CONTAIN_SET_PAIR_BUDGET:
+    if not fits("containment_set_pairs", n_sets * (n_sets - 1) // 2):
         return None
     member = ts.select("rid", "ts").join(
         sets.select("sid", "ts"), "ts"
@@ -895,41 +831,20 @@ def wjaccard_join(
         ).localCheckpoint()
 
     tw_a, tw_b = _tw(la), _tw(rb)
-    dfreq = tw_a.unionByName(tw_b).groupBy("tok").agg(F.count("*").alias("df"))
-    weights = dfreq.select(
-        "tok",
-        F.round(
-            F.lit(float(idf_scale))
-            * F.log(F.lit(1.0) + F.lit(float(n_docs)) / F.col("df"))
-        ).cast("long").alias("w"),
-    )
-    # r7: the (tok, w) weight table is consumed by every downstream
-    # branch (token-weight joins, per-doc totals, ICWS sketch input,
-    # the small-vocab probe) — without a pin each branch re-runs the
-    # full explode + groupBy. Vocabulary-sized, so the materialization
-    # is tiny relative to one recompute (guide §5 caching rule).
-    weights = weights.localCheckpoint()
+    weights, vocab = _idf_weights(tw_a.unionByName(tw_b), n_docs, idf_scale)
+    tww_a, tww_b = tw_a.join(weights, "tok"), tw_b.join(weights, "tok")
     # r7: same exact-all-pairs-over-distinct-masks fast path as
     # tfidf_weighted_jaccard_pairs (the oracle here is exact all-pairs
     # across the two corpora): skips both ICWS sketches, the band join
     # and the candidate dropDuplicates when the runtime probe allows.
-    fast = _small_vocab_wjaccard_allpairs(
-        tw_a.join(weights, "tok"), tw_b.join(weights, "tok"),
-        weights, threshold,
-    )
-    if fast is not None:
-        return fast
-
-    def _prep(tw: DataFrame):
-        tww = tw.join(weights, "tok")
-        tot = tww.groupBy("rid").agg(F.sum("w").alias("W"))
-        keyed = _icws_keyed(tww, icws_hashes, icws_bands)
-        return tww, tot, keyed
-
-    tww_a, tot_a, ka = _prep(tw_a)
-    tww_b, tot_b, kb = _prep(tw_b)
-    ka = ka.withColumnRenamed("rid", "id_a")
-    kb = kb.withColumnRenamed("rid", "id_b")
+    if vocab is not None:
+        fast = _small_vocab_wjaccard_allpairs(
+            tww_a, tww_b, vocab, threshold, n_docs
+        )
+        if fast is not None:
+            return fast
+    ka = _icws_keyed(tww_a, icws_hashes, icws_bands).withColumnRenamed("rid", "id_a")
+    kb = _icws_keyed(tww_b, icws_hashes, icws_bands).withColumnRenamed("rid", "id_b")
     ok = (
         ka.groupBy("bk").agg(F.count("*").alias("ca"))
         .join(kb.groupBy("bk").agg(F.count("*").alias("cb")), "bk")
@@ -941,28 +856,9 @@ def wjaccard_join(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    fast = _small_vocab_wjaccard(cand, tww_a, tww_b, weights, threshold,
-                                 broadcast_masks=n_docs <= 4_000_000)
-    if fast is not None:
-        return fast
-    inter = (
-        cand
-        .join(tww_a.selectExpr("rid as id_a", "tok", "w"), "id_a")
-        .join(tww_b.selectExpr("rid as id_b", "tok"), ["id_b", "tok"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("w").alias("iw"))
-    )
-    return (
-        inter.join(tot_a.selectExpr("rid as id_a", "W as wa"), "id_a")
-        .join(tot_b.selectExpr("rid as id_b", "W as wb"), "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(
-                F.col("iw") / (F.col("wa") + F.col("wb") - F.col("iw")), 6
-            ).alias("wjaccard"),
-        )
-        .where(F.col("wjaccard") >= threshold)
-    )
+    if vocab is not None:
+        return _small_vocab_wjaccard(cand, tww_a, tww_b, vocab, threshold, n_docs)
+    return _token_join_wjaccard(cand, tww_a, tww_b, threshold)
 
 
 def simhash_duplicates(

@@ -35,8 +35,9 @@ dropped BEFORE the self-join, so pair generation is bounded by
 purged-block sizes — the quadratic hazard never materializes), ONE
 pair-aggregation shuffle (groupBy (id_a, id_b) is simultaneously the
 dedup and the CBS count), and for wnp a combinable node-mean groupBy
-over 2|E| rows joined back by node id. No driver-side state, no
-broadcast of anything record-sized.
+over 2|E| rows joined back by node id. No driver-side state;
+record-sized tables are broadcast only within the ``broadcast_rows``
+budget (operators/budgets.py).
 
 Determinism: with ``weight="cbs"`` every weight is a small integer
 held exactly in a double, so partial-sum ordering cannot change
@@ -51,6 +52,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from resolve_spark.operators.budgets import broadcaster
 
 
 def _purged_keyed(
@@ -127,6 +130,9 @@ def _meta_block_prune_sig(
     sigs = sig.groupBy("_ks").agg(
         F.count(F.lit(1)).alias("_cnt"), F.min("rid").alias("_sid")
     ).localCheckpoint()
+    # records = Σ signature counts: bounds every per-record and
+    # per-signature broadcast below without rescanning the records
+    bc = broadcaster(sigs.agg(F.sum("_cnt")).first()[0] or 0)
     members = sig.join(sigs.select("_ks", "_sid"), "_ks").select("rid", "_sid")
     skeys = sigs.select("_sid", "_cnt", F.explode("_ks").alias("key"))
     a = skeys.select(
@@ -190,13 +196,13 @@ def _meta_block_prune_sig(
         )
         kept = (
             spairs.join(
-                F.broadcast(
+                bc(
                     navg.select(F.col("_p").alias("_pa"), F.col("_avg").alias("_ga"))
                 ),
                 "_pa",
             )
             .join(
-                F.broadcast(
+                bc(
                     navg.select(F.col("_p").alias("_pb"), F.col("_avg").alias("_gb"))
                 ),
                 "_pb",
@@ -207,8 +213,8 @@ def _meta_block_prune_sig(
             )
         )
     kept = kept.select("_pa", "_pb", "cbs")
-    ma = F.broadcast(members.select(F.col("_sid").alias("_pa"), F.col("rid").alias("_ra")))
-    mb = F.broadcast(members.select(F.col("_sid").alias("_pb"), F.col("rid").alias("_rb")))
+    ma = bc(members.select(F.col("_sid").alias("_pa"), F.col("rid").alias("_ra")))
+    mb = bc(members.select(F.col("_sid").alias("_pb"), F.col("rid").alias("_rb")))
     cross = (
         kept.where(F.col("_pa") != F.col("_pb"))
         .join(ma, "_pa")
@@ -251,13 +257,20 @@ def meta_block_prune(
     if weight == "cbs" and scheme in ("wep", "wnp"):
         # r7: signature-compressed formulation — bit-identical output
         # (see _meta_block_prune_sig) without the edge-stream shuffles.
-        # (None return is the test hook that forces the record-level
-        # plan; the helper itself always applies.)
-        out = _meta_block_prune_sig(
+        return _meta_block_prune_sig(
             df, id_col, keys_col, scheme, max_block_size
         )
-        if out is not None:
-            return out
+    return _meta_block_prune_records(
+        df, id_col, keys_col, weight, scheme, max_block_size, k
+    )
+
+
+def _meta_block_prune_records(
+    df: DataFrame, id_col: str, keys_col: str, weight: str, scheme: str,
+    max_block_size: int, k: int,
+) -> DataFrame:
+    """Record-level plan of :func:`meta_block_prune` over the edge
+    stream: every weight/scheme, and the signature plan's reference."""
     edges = blocking_graph_edges(df, id_col, keys_col, max_block_size)
     # r7: per-node companion tables (key-set sizes, mean incident
     # weight) hold at most one row per RECORD, a factor |E|/|V| smaller
@@ -266,8 +279,7 @@ def meta_block_prune(
     # sorting the edges twice per attach (measured 15s of q91's 28s at
     # sf1.0). Broadcast them while the record table is broadcast-sized;
     # beyond that the shuffle join is the right plan and is kept.
-    _bcast = df.count() <= 4_000_000
-    _maybe_b = F.broadcast if _bcast else (lambda d: d)
+    _maybe_b = broadcaster(df.count())
     if weight == "cbs":
         edges = edges.withColumn("weight", F.col("cbs").cast("double"))
     elif weight == "js":

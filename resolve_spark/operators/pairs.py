@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from resolve_spark.config import BlockingConfig
+from resolve_spark.operators.budgets import fits
 
 
 @dataclass
@@ -174,7 +175,7 @@ def candidate_pairs(
     n_hot = hot.count()
     if n_hot == 0:
         pairs = _full_pairs(keyed)
-    elif n_hot <= 200_000:
+    elif fits("broadcast_hot_keys", n_hot):
         hot_b = F.broadcast(hot)
         keyed_small = keyed.join(hot_b, "key", "left_anti")
         keyed_big = keyed.join(

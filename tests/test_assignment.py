@@ -14,6 +14,7 @@ from resolve_spark.operators.assignment import (
     greedy_one_to_one,
     mutual_best_pairs,
 )
+from resolve_spark.operators.budgets import BUDGETS
 
 
 def sequential_greedy(edges):
@@ -71,7 +72,7 @@ def test_mutual_best_hand_case(spark):
     assert full == {(1, 1), (2, 2)}
 
 
-def test_exact_max_rounds_chain_succeeds(spark):
+def test_exact_max_rounds_chain_succeeds(spark, monkeypatch):
     """A score-sorted chain accepts exactly ONE edge per round; a chain
     needing exactly max_rounds productive rounds must SUCCEED (the
     for-else previously required an extra empty round to break, so the
@@ -87,8 +88,9 @@ def test_exact_max_rounds_chain_succeeds(spark):
     # and a genuinely insufficient budget still fails loud (the
     # max_rounds contract belongs to the distributed fixpoint; the r7
     # single-scan path always converges, so force the fixpoint here)
+    monkeypatch.setitem(BUDGETS, "greedy_sequential_pairs", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        greedy_one_to_one(df, max_rounds=2, sequential_max_pairs=0).collect()
+        greedy_one_to_one(df, max_rounds=2).collect()
 
 
 def test_one_to_one_constraint_and_determinism(spark):
